@@ -74,12 +74,17 @@ case class ShingleHashSeqExpr(child: Expression, n: Int)
 /** Window-min fingerprint selection over a position-ordered hash
   * sequence — the native form of [[TextFunctions.winnowSelect]]'s HOF
   * chain; see [[ShingleHashSeqExpr]]'s scaladoc for the shared
-  * null-to-empty contract. Input elements must be non-null (shingle
-  * hashes are). */
+  * null-to-empty contract. Null ELEMENTS (possible only when the input
+  * type says `containsNull`) are skipped exactly as the HOF's
+  * `array_min` skips them: a window holding only nulls selects NULL. */
 case class WinnowSelectExpr(child: Expression, w: Int)
     extends UnaryExpression {
   require(w >= 1, s"winnow window must be >= 1, got $w")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  private def elemNulls: Boolean = child.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = elemNulls)
   override def nullable: Boolean = false
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
@@ -92,7 +97,7 @@ case class WinnowSelectExpr(child: Expression, w: Int)
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) ShingleExprs.emptyLongArray()
-    else ShingleExprs.winnowSelect(v.asInstanceOf[ArrayData], w)
+    else ShingleExprs.winnowSelect(v.asInstanceOf[ArrayData], w, elemNulls)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val c = child.genCode(ctx)
@@ -100,7 +105,7 @@ case class WinnowSelectExpr(child: Expression, w: Int)
       ${c.code}
       org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = ${c.isNull}
         ? graft.functions.ShingleExprs.emptyLongArray()
-        : graft.functions.ShingleExprs.winnowSelect(${c.value}, $w);""",
+        : graft.functions.ShingleExprs.winnowSelect(${c.value}, $w, $elemNulls);""",
       isNull = FalseLiteral)
   }
   override protected def withNewChildInternal(newChild: Expression): WinnowSelectExpr =
@@ -180,28 +185,40 @@ object ShingleExprs {
   }
 
   /** Distinct window minima in first-occurrence order — array_distinct
-    * ∘ per-window array_min, allocation-free. */
-  def winnowSelect(hs: ArrayData, w: Int): ArrayData = {
+    * ∘ per-window array_min, allocation-free. With `containsNull`, null
+    * elements are skipped and an all-null window selects NULL (kept
+    * once, at its first occurrence), as array_min and array_distinct
+    * do. */
+  def winnowSelect(hs: ArrayData, w: Int, containsNull: Boolean): ArrayData = {
     val sz = hs.numElements()
     if (sz < 1) return Empty
     val m = math.max(sz - (w - 1), 1)
     val seen = new java.util.HashSet[java.lang.Long]()
     val out = new Array[Long](m)
     var outN = 0
+    var nullAt = -1
     var i = 0
     while (i < m) {
       var min = java.lang.Long.MAX_VALUE
+      var any = false
       var k = i
       val end = math.min(i + w, sz)
       while (k < end) {
-        val v = hs.getLong(k)
-        if (v < min) min = v
+        if (!containsNull || !hs.isNullAt(k)) {
+          val v = hs.getLong(k)
+          if (v < min) min = v
+          any = true
+        }
         k += 1
       }
-      if (seen.add(min)) { out(outN) = min; outN += 1 }
+      if (!any) { if (nullAt < 0) { nullAt = outN; outN += 1 } }
+      else if (seen.add(min)) { out(outN) = min; outN += 1 }
       i += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(java.util.Arrays.copyOf(out, outN))
+    if (nullAt < 0)
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(java.util.Arrays.copyOf(out, outN))
+    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Array.tabulate[Any](outN)(j => if (j == nullAt) null else out(j)))
   }
 }

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -48,27 +48,21 @@ object KeyBloom {
   private def fs(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private val BatchName = "batch-(\\d+)\\.bloom".r
-  private val SnapName = "snapshot-(\\d+)\\.bloom".r
+  private def batchIds(v: CommitLog.View) = v.ids("batch-", ".bloom")
+  private def snapshotIds(v: CommitLog.View) = v.ids("snapshot-", ".bloom")
 
-  private def writeBloom(f: FileSystem, dir: Path, name: String,
-                         bf: BloomFilter): Unit = {
-    f.mkdirs(dir)
-    // tmp + rename: a reader never sees a torn bloom file, and a crash
-    // mid-write leaves only a `.tmp` the listers below ignore.
-    val tmp = new Path(dir, s".$name.tmp")
-    val out = f.create(tmp, true)
-    try bf.writeTo(out) finally out.close()
-    val target = new Path(dir, name)
-    f.delete(target, false) // idempotent rewrite of the same id
-    if (!f.rename(tmp, target))
-      throw new java.io.IOException(s"KeyBloom: rename $tmp -> $target failed")
-  }
+  /** Commit a bloom file create-once (tmp + rename): a reader never
+    * sees a torn bloom, a crash mid-write leaves only a `.tmp` the
+    * listings ignore, and a replayed id's bloom is the same bytes. */
+  private def writeBloom(spark: SparkSession, root: String, table: String,
+                         name: String, bf: BloomFilter): Unit =
+    CommitLog.publish(fs(spark, root), bloomDir(root, table), name)(out => bf.writeTo(out))
 
-  private def readBloom(f: FileSystem, p: Path): BloomFilter = {
-    val in = f.open(p)
-    try BloomFilter.readFrom(in) finally in.close()
-  }
+  /** Per-batch blooms not yet folded into a snapshot bloom —
+    * [[StoreMaintenance.auto]]'s trigger. */
+  private[sinks] def unfoldedBatches(spark: SparkSession, root: String,
+                                     table: String): Int =
+    batchIds(CommitLog.list(fs(spark, root), bloomDir(root, table))).size
 
   /** Build and persist the bloom for the batch applied (or about to be
     * applied) as `batchId`: one pass over the batch's DML rows of
@@ -77,8 +71,8 @@ object KeyBloom {
     * allocate the same ~MB file for a 10-row micro-batch as for a
     * 1M-row backfill; pass `expectedItems` to override. Blooms of
     * different batches never merge, so each file carries its own
-    * parameters. Rewrites the same batch id idempotently (replay-safe:
-    * same rows → same count → same bloom). */
+    * parameters. A replayed batch id builds the same bloom (same rows →
+    * same count → same bloom), so publishing it again changes nothing. */
   def addBatch(spark: SparkSession, root: String, table: String,
                batch: DataFrame, batchId: Long,
                expectedItems: Long = -1L, fpp: Double = 0.01): Unit = {
@@ -90,8 +84,7 @@ object KeyBloom {
         proj.count()), 1L)
     val bf = graft.Label.job(spark, s"bloom.build $table b=$batchId")(
       proj.stat.bloomFilter("row_key", n, fpp))
-    writeBloom(fs(spark, root), new Path(bloomDir(root, table)),
-      s"batch-$batchId.bloom", bf)
+    writeBloom(spark, root, table, s"batch-$batchId.bloom", bf)
   }
 
   /** Fold the bloom log: build ONE bloom from the LIVE snapshot's keys
@@ -117,16 +110,11 @@ object KeyBloom {
         val n = math.max(live.count(), 1L)
         live.stat.bloomFilter("row_key", n, fpp)
       } finally live.unpersist()
-    val f = fs(spark, root)
-    val dir = new Path(bloomDir(root, table))
-    writeBloom(f, dir, s"snapshot-$asBatch.bloom", bf)
-    f.listStatus(dir).map(_.getPath).foreach { p =>
-      p.getName match {
-        case BatchName(id) if id.toLong <= asBatch => f.delete(p, false)
-        case SnapName(id) if id.toLong < asBatch => f.delete(p, false)
-        case _ => ()
-      }
-    }
+    writeBloom(spark, root, table, s"snapshot-$asBatch.bloom", bf)
+    val v = CommitLog.list(fs(spark, root), bloomDir(root, table))
+    (batchIds(v).filter(_ <= asBatch).map(id => s"batch-$id.bloom") ++
+      snapshotIds(v).filter(_ < asBatch).map(id => s"snapshot-$id.bloom"))
+      .foreach(n => v.fs.delete(v.path(n), false))
   }
 
   /** The subset of `keys` that MIGHT exist in the table — keys absent
@@ -140,53 +128,48 @@ object KeyBloom {
     * driver reads (the centroid-collect posture), never a scan. */
   def filterPresent(spark: SparkSession, root: String, table: String,
                     keys: Seq[String],
-                    atOrBefore: Option[Long] = None): Seq[String] = {
-    val f = fs(spark, root)
-    val dir = new Path(bloomDir(root, table))
-    val names =
-      try f.listStatus(dir).toSeq.map(_.getPath.getName)
-      catch { case _: java.io.FileNotFoundException => return keys }
-    val batchIds = names.collect { case BatchName(id) => id.toLong }.toSet
-    val snapId = names.collect { case SnapName(id) => id.toLong }
-      .foldLeft(Option.empty[Long])((a, v) => Some(a.fold(v)(math.max(_, v))))
-    if (batchIds.isEmpty && snapId.isEmpty) return keys
-    // history collapsed past the read horizon → pruning can't be sound
-    if (atOrBefore.exists(h => snapId.exists(h < _))) return keys
-    // manifest cross-check: every committed batch must be covered by the
-    // snapshot bloom or its own batch bloom, else pruning is OFF.
-    val tdir = ParquetUpsertStore.tableDir(root, table)
-    val committed = ParquetUpsertStore.committedManifestIds(f, tdir)
-    val covered = (id: Long) =>
-      snapId.exists(id <= _) || batchIds.contains(id)
-    if (committed.exists(!covered(_))) return keys
-    // The cross-check only sees SURVIVING manifests: once vacuum has run
-    // (floor armed), batches below the floor are unlistable, so their
-    // coverage can only be vouched for by a snapshot bloom at or above
-    // the floor — without one, a key live from a vacuumed-away batch
-    // could be in no bloom at all (the permanent false negative the
-    // cross-check exists to prevent). StoreMaintenance.run's ordering
-    // (bloom compact before vacuum) always satisfies this; a direct
-    // vacuum call degrades to no pruning until the next compact.
-    val floor = ParquetUpsertStore.readFloor(f, tdir)
-    if (floor != Long.MinValue && !snapId.exists(_ >= floor)) return keys
-    val useful = names.filter {
-      case BatchName(id) => snapId.forall(id.toLong > _)
-      case n => snapId.exists(s => n == s"snapshot-$s.bloom")
-    }
+                    atOrBefore: Option[Long] = None): Seq[String] =
+    filterIn(spark, CommitLog.list(fs(spark, root),
+      ParquetUpsertStore.tableDir(root, table)), root, table, keys, atOrBefore)
+
+  /** [[filterPresent]] against a table view the caller reads through
+    * (taken BEFORE the bloom listing: a batch committed in it wrote its
+    * bloom first, so the listing sees it). */
+  private def filterIn(spark: SparkSession, tview: CommitLog.View,
+                       root: String, table: String, keys: Seq[String],
+                       atOrBefore: Option[Long]): Seq[String] = {
+    val v = CommitLog.list(fs(spark, root), bloomDir(root, table))
+    val batches = batchIds(v)
+    val snapId = snapshotIds(v).lastOption
+    // no blooms built at all: pruning is off, not a miss for every key
+    if (batches.isEmpty && snapId.isEmpty) return keys
+    // The store's coverage rule, with the snapshot bloom as the fold
+    // and per-batch blooms as the markers. StoreMaintenance.run's
+    // ordering (bloom compact before vacuum) always satisfies its
+    // floor clause; a direct vacuum call degrades to no pruning until
+    // the next compact.
+    if (!ParquetUpsertStore.coverageSound(tview, snapId, batches.toSet, atOrBefore))
+      return keys
+    val useful = batches.filter(id => snapId.forall(id > _))
+      .map(id => s"batch-$id.bloom") ++ snapId.map(id => s"snapshot-$id.bloom")
     // A file listed a moment ago may be gone by the read (a concurrent
     // compaction's superseding deletes). Losing ANY bloom loses
     // coverage, so the only sound degradation is no pruning at all —
     // the next lookup sees the post-compaction set and prunes again.
     val blooms =
-      try useful.map(n => readBloom(f, new Path(dir, n)))
+      try useful.flatMap(n => CommitLog.open(v, n)(in => BloomFilter.readFrom(in)))
       catch { case _: java.io.IOException => return keys }
+    if (blooms.size < useful.size) return keys
     keys.filter(k => blooms.exists(_.mightContainString(k)))
   }
 
-  /** [[ParquetUpsertStore.lookup]] behind the miss fast path. */
+  /** [[ParquetUpsertStore.lookup]] behind the miss fast path: one view
+    * of the table directory serves the coverage check and the read. */
   def lookup(spark: SparkSession, store: ParquetUpsertStore, root: String,
              table: String, keys: Seq[String],
-             atOrBefore: Option[Long] = None): DataFrame =
-    store.lookup(spark, table,
-      filterPresent(spark, root, table, keys, atOrBefore), atOrBefore)
+             atOrBefore: Option[Long] = None): DataFrame = {
+    val tview = store.view(spark, table)
+    store.lookupIn(spark, tview,
+      filterIn(spark, tview, root, table, keys, atOrBefore), atOrBefore)
+  }
 }

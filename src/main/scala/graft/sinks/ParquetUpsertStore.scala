@@ -6,9 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import java.io.{BufferedReader, InputStreamReader}
-import java.nio.charset.StandardCharsets.UTF_8
-
 /** Durable, cluster-valid CDC target: one bucket-partitioned,
   * copy-on-write parquet table per CDC table, committed through a
   * manifest log.
@@ -70,6 +67,12 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
 
   private def tableDir(table: String): String =
     ParquetUpsertStore.tableDir(root, table)
+
+  /** One listing of the table directory: every question a call asks
+    * of the commit log (latest id, coverage, the manifest to read) is
+    * answered from it. */
+  private[sinks] def view(spark: SparkSession, table: String): CommitLog.View =
+    CommitLog.list(fileSystem(spark, root), tableDir(table))
 
   /** Fault-injection seam (crash-consistency testing): applied to the
     * merged batch just before its parquet write. A test subclass can
@@ -154,20 +157,21 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     * committed manifest (0 for a fresh table) — the auto-increment the
     * SQL INSERT face uses, where no streaming checkpoint hands out ids. */
   def nextBatchId(spark: SparkSession, table: String): Long =
-    maxManifestId(fileSystem(spark, root), tableDir(table)).fold(0L)(_ + 1L)
+    committedIds(view(spark, table)).lastOption.fold(0L)(_ + 1L)
 
   private def applyTable(spark: SparkSession, dml: DataFrame,
                      ddlSchemas: Map[String, StructType],
                      t: String, batchId: Long): Unit = {
     val fs = fileSystem(spark, root)
     val tdir = tableDir(t)
+    val v = view(spark, t)
     // Refuse to re-apply a batch below the newest commit: a replay of a
     // committed id is already shadowed by max-id readers, and if vacuum
     // dropped its manifest, re-creating one on top of the CURRENT mapping
     // would make time travel at that id return anachronistic data. The
     // streaming checkpoint only ever replays the newest uncommitted-or-
     // equal id, so this guard costs nothing on the normal path.
-    if (maxManifestId(fs, tdir).exists(batchId < _)) {
+    if (committedIds(v).lastOption.exists(batchId < _)) {
       // Observable for a direct programmatic caller committing out of
       // order — for them this drop is data loss, not a harmless replay.
       System.err.println(s"ParquetUpsertStore: skipping batch $batchId for " +
@@ -175,7 +179,7 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
         "direct callers must commit monotonically increasing batch ids")
       return
     }
-    val cur = readManifest(fs, tdir)
+    val cur = readManifest(v)
     val nb = cur.map(_.numBuckets).getOrElse(numBuckets)
 
     // evolve the recorded schema on DDL (metadata-only alter)
@@ -210,7 +214,7 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
 
     val mapping = cur.map(_.buckets).getOrElse(Map.empty[Int, String])
     if (touched.nonEmpty) {
-      val existing = readBuckets(spark, tdir, mapping, touched, nb)
+      val existing = readBuckets(spark, fs, tdir, mapping, touched, nb)
       // ONE latest-per-key window over existing ∪ batch. The former
       // two-phase form (compact the batch per key, then merge the result
       // with the existing buckets) ran two full window shuffles per
@@ -248,30 +252,17 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     // ids below the compaction point is untouched (older manifests and
     // their directories stay until vacuum).
     if (autoCompactManifests > 0 &&
-        manifestCount(fs, tdir) > autoCompactManifests) {
+        (v.ids("manifest-").toSet + batchId).size > autoCompactManifests) {
       compact(spark, t, batchId)
       if (autoVacuumRetainBatches >= 0)
         vacuum(spark, t, keepFromBatchId = batchId - autoVacuumRetainBatches)
     }
   }
 
-  private def manifestCount(fs: FileSystem, tdir: String): Int =
-    try fs.listStatus(new Path(tdir))
-      .count(_.getPath.getName.matches("manifest-\\d+"))
-    catch { case _: java.io.FileNotFoundException => 0 }
-
-  private def maxManifestId(fs: FileSystem, tdir: String): Option[Long] =
-    try fs.listStatus(new Path(tdir)).iterator
-      .map(_.getPath.getName)
-      .filter(_.matches("manifest-\\d+"))
-      .map(_.stripPrefix("manifest-").toLong)
-      .foldLeft(Option.empty[Long])((acc, v) => Some(acc.fold(v)(math.max(_, v))))
-    catch { case _: java.io.FileNotFoundException => None }
-
   /** Live rows of `table` at the latest committed snapshot
     * (tombstones filtered): `row_key, op, values, version`. */
   def snapshot(spark: SparkSession, table: String): DataFrame =
-    snapshotImpl(spark, table, atOrBefore = None)
+    snapshotIn(spark, view(spark, table), atOrBefore = None)
 
   /** Time travel: live rows as of committed batch `batchId` — the state
     * the table converged to after the largest committed batch ≤ that id.
@@ -281,18 +272,19 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     * time travel uses). [[compact]] collapses history — after it, only
     * ids ≥ the compaction id resolve to pre-compaction-free state. */
   def snapshotAt(spark: SparkSession, table: String, batchId: Long): DataFrame =
-    snapshotImpl(spark, table, atOrBefore = Some(batchId))
+    snapshotIn(spark, view(spark, table), atOrBefore = Some(batchId))
 
-  private def snapshotImpl(spark: SparkSession, table: String,
-                           atOrBefore: Option[Long]): DataFrame = {
-    val fs = fileSystem(spark, root)
-    val tdir = tableDir(table)
-    val m = readManifest(fs, tdir, atOrBefore)
-      .getOrElse(Manifest(numBuckets, None, Map.empty))
-    readBuckets(spark, tdir, m.buckets, m.buckets.keySet, m.numBuckets)
+  /** [[snapshot]]/[[snapshotAt]] over a view the caller already took. */
+  private[sinks] def snapshotIn(spark: SparkSession, v: CommitLog.View,
+                                atOrBefore: Option[Long]): DataFrame = {
+    val m = manifestOrEmpty(v, atOrBefore)
+    readBuckets(spark, v.fs, v.dir, m.buckets, m.buckets.keySet, m.numBuckets)
       .filter(col("op") =!= graft.model.OpType.Delete)
       .drop("bucket")
   }
+
+  private def manifestOrEmpty(v: CommitLog.View, atOrBefore: Option[Long]): Manifest =
+    readManifest(v, atOrBefore).getOrElse(Manifest(numBuckets, None, Map.empty))
 
   /** Typed snapshot: live rows re-typed through the manifest's RECORDED
     * schema (the last applied DDL, as evolved by [[SchemaEvolution]]) via
@@ -303,10 +295,11 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     * no data files rewritten. */
   def snapshotTyped(spark: SparkSession, table: String,
                     atOrBefore: Option[Long] = None): DataFrame = {
-    val schema = schemaOf(spark, table, atOrBefore).getOrElse(
+    val v = view(spark, table)
+    val schema = schemaIn(v, atOrBefore).getOrElse(
       throw new IllegalStateException(
         s"table '$table' has no recorded schema — no DDL record has been applied"))
-    snapshotImpl(spark, table, atOrBefore)
+    snapshotIn(spark, v, atOrBefore)
       .select(graft.operators.DmlFlattener.typedColumns(col("values"), schema): _*)
   }
 
@@ -319,13 +312,17 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     * hash the write path uses (Spark's Murmur3 with the `hash()` default
     * seed), evaluated on literals — no job, no scan. */
   def lookup(spark: SparkSession, table: String, keys: Seq[String],
-             atOrBefore: Option[Long] = None): DataFrame = {
-    val fs = fileSystem(spark, root)
-    val tdir = tableDir(table)
-    val m = readManifest(fs, tdir, atOrBefore)
-      .getOrElse(Manifest(numBuckets, None, Map.empty))
+             atOrBefore: Option[Long] = None): DataFrame =
+    lookupIn(spark, view(spark, table), keys, atOrBefore)
+
+  /** [[lookup]] over a view the caller already took (and checked its
+    * sidecar coverage against). */
+  private[sinks] def lookupIn(spark: SparkSession, v: CommitLog.View,
+                              keys: Seq[String],
+                              atOrBefore: Option[Long]): DataFrame = {
+    val m = manifestOrEmpty(v, atOrBefore)
     val buckets = keys.map(k => bucketOf(k, m.numBuckets)).toSet
-    readBuckets(spark, tdir, m.buckets, buckets, m.numBuckets)
+    readBuckets(spark, v.fs, v.dir, m.buckets, buckets, m.numBuckets)
       .filter(col("row_key").isin(keys: _*))
       .filter(col("op") =!= graft.model.OpType.Delete)
       .drop("bucket")
@@ -343,26 +340,23 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     * values is not a change. */
   def diff(spark: SparkSession, table: String,
            fromBatchId: Long, toBatchId: Long): DataFrame = {
-    val fs = fileSystem(spark, root)
-    val tdir = tableDir(table)
+    val v = view(spark, table)
     // An endpoint below the vacuum floor would resolve to an empty
     // manifest and mis-report every live row (as INSERT for a vacuumed
     // `from`, as DELETE for a vacuumed `to`) — refuse instead. The
     // floor is the smallest manifest id that survived the last vacuum.
-    val floor = readFloor(fs, tdir)
+    val floor = readFloor(v)
     Seq("fromBatchId" -> fromBatchId, "toBatchId" -> toBatchId).foreach {
       case (what, id) => require(id >= floor,
         s"diff $what=$id is below table '$table' retention floor $floor — " +
           "that history was vacuumed; re-seed from a full snapshot")
     }
-    def manifest(id: Long) = readManifest(fs, tdir, Some(id))
-      .getOrElse(Manifest(numBuckets, None, Map.empty))
-    val mFrom = manifest(fromBatchId)
-    val mTo = manifest(toBatchId)
+    val mFrom = manifestOrEmpty(v, Some(fromBatchId))
+    val mTo = manifestOrEmpty(v, Some(toBatchId))
     val changed = (mFrom.buckets.keySet ++ mTo.buckets.keySet)
       .filter(b => mFrom.buckets.get(b) != mTo.buckets.get(b))
     def live(m: Manifest, tag: String) =
-      readBuckets(spark, tdir, m.buckets, changed, m.numBuckets)
+      readBuckets(spark, v.fs, v.dir, m.buckets, changed, m.numBuckets)
         .filter(col("op") =!= graft.model.OpType.Delete)
         .select(col("row_key"), col("values").as(s"values_$tag"),
           col("version").as(s"version_$tag"))
@@ -390,11 +384,10 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     * count), which is the SAFE direction for a broadcast decision. */
   def dataSizeInBytes(spark: SparkSession, table: String,
                       atOrBefore: Option[Long] = None): Long = {
-    val fs = fileSystem(spark, root)
-    val tdir = tableDir(table)
-    readManifest(fs, tdir, atOrBefore).fold(0L) { m =>
+    val v = view(spark, table)
+    readManifest(v, atOrBefore).fold(0L) { m =>
       m.buckets.values.toSet.iterator.map { (d: String) =>
-        try fs.getContentSummary(new Path(s"$tdir/$d")).getLength
+        try v.fs.getContentSummary(v.path(d)).getLength
         catch { case _: java.io.IOException => 0L }
       }.sum
     }
@@ -404,8 +397,11 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     * before `atOrBefore`, latest when unbounded). */
   def schemaOf(spark: SparkSession, table: String,
                atOrBefore: Option[Long] = None): Option[StructType] =
-    readManifest(fileSystem(spark, root), tableDir(table), atOrBefore)
-      .flatMap(_.schemaJson)
+    schemaIn(view(spark, table), atOrBefore)
+
+  private def schemaIn(v: CommitLog.View,
+                       atOrBefore: Option[Long]): Option[StructType] =
+    readManifest(v, atOrBefore).flatMap(_.schemaJson)
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
 
   /** Materialize the typed snapshot as a Z-order-clustered parquet
@@ -468,14 +464,14 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     require(newNumBuckets > 0, s"newNumBuckets must be positive, got $newNumBuckets")
     val fs = fileSystem(spark, root)
     val tdir = tableDir(table)
-    readManifest(fs, tdir)
+    readManifest(view(spark, table))
       .filterNot(_.numBuckets == newNumBuckets) // no-op if already sized
       .foreach { m =>
         // the target count is part of the directory name: two rebuckets
         // replace-committed at the SAME id (the documented convention)
         // must never lazily read the directory they are overwriting
         val rdir = s"snap-$asBatchId-r$newNumBuckets"
-        readBuckets(spark, tdir, m.buckets, m.buckets.keySet, m.numBuckets)
+        readBuckets(spark, fs, tdir, m.buckets, m.buckets.keySet, m.numBuckets)
           .drop("bucket")
           .withColumn("bucket", pmod(hash(col("row_key")), lit(newNumBuckets)))
           .repartition(newNumBuckets, col("bucket"))
@@ -504,10 +500,10 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     val cdir = s"snap-$asBatchId-c"
     // Re-compacting an already-compacted id would read and overwrite the
     // same directory (data loss under lazy evaluation) — no-op instead.
-    readManifest(fs, tdir)
+    readManifest(view(spark, table))
       .filterNot(m => m.buckets.nonEmpty && m.buckets.values.forall(_ == cdir))
       .foreach { m =>
-      val live = readBuckets(spark, tdir, m.buckets, m.buckets.keySet,
+      val live = readBuckets(spark, fs, tdir, m.buckets, m.buckets.keySet,
           m.numBuckets)
         .filter(col("op") =!= graft.model.OpType.Delete)
       graft.Label.job(spark, s"store.compact $table b=$asBatchId")(
@@ -530,8 +526,7 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
   /** True iff `dir` holds at least one `bucket=` partition directory —
     * i.e. the preceding write actually materialized rows. */
   private def hasBucketDirs(fs: FileSystem, dir: String): Boolean =
-    try fs.listStatus(new Path(dir)).exists(_.getPath.getName.startsWith("bucket="))
-    catch { case _: java.io.FileNotFoundException => false }
+    CommitLog.list(fs, dir).names.exists(_.startsWith("bucket="))
 
   /** Drop history: delete manifests with id < `keepFromBatchId` and every
     * snapshot directory no longer referenced by a retained manifest.
@@ -543,19 +538,13 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     * reader either sees a retained manifest (whose directories survive)
     * or none. */
   def vacuum(spark: SparkSession, table: String, keepFromBatchId: Long): Unit = {
-    val fs = fileSystem(spark, root)
-    val tdir = new Path(tableDir(table))
-    val entries =
-      try fs.listStatus(tdir).toSeq
-      catch { case _: java.io.FileNotFoundException => return }
-    val manifestIds = entries.map(_.getPath.getName)
-      .filter(_.matches("manifest-\\d+"))
-      .map(_.stripPrefix("manifest-").toLong)
+    val v = view(spark, table)
+    val manifestIds = committedIds(v)
     if (manifestIds.isEmpty) return
     // never drop the newest commit, whatever the floor says
     val floor = math.min(keepFromBatchId, manifestIds.max)
     val referenced = manifestIds.filter(_ >= floor).flatMap { id =>
-      readManifest(fs, tableDir(table), Some(id)).toSeq.flatMap(_.buckets.values)
+      readManifest(v, Some(id)).toSeq.flatMap(_.buckets.values)
     }.toSet
     // Record the retention floor BEFORE deleting anything, so history
     // readers (diff) refuse vacuumed ids instead of silently resolving
@@ -566,35 +555,22 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     // retains only {3}: id 2 resolves to nothing). Monotone: never
     // lowered by a later vacuum. Crash ordering: a crash after this
     // write refuses a little too much (floor recorded, deletions
-    // incomplete) — never too little; readFloor also falls back to the
-    // tmp file if the crash lands between the delete and rename here.
+    // incomplete) — never too little; a crash inside the replace
+    // leaves the old floor or the tmp one, and readFloor reads either.
     // A vacuum that deletes nothing creates no new unsafety — leave the
     // floor alone (raising it would wrongly refuse bootstrap diffs on a
     // table whose history is fully intact).
     val toDelete = manifestIds.filter(_ < floor)
     if (toDelete.nonEmpty) {
-      val minRetained = manifestIds.filter(_ >= floor).min
-      val newFloor = math.max(minRetained, readFloor(fs, tableDir(table)))
-      val tmp = new Path(tdir, ".vacuum-floor.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(newFloor.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      fs.delete(new Path(tdir, "vacuum-floor"), false)
-      fs.rename(tmp, new Path(tdir, "vacuum-floor"))
+      val newFloor = math.max(manifestIds.filter(_ >= floor).min, readFloor(v))
+      CommitLog.publishText(v.fs, v.dir, "vacuum-floor", newFloor.toString,
+        replace = true)
     }
-    toDelete.foreach { id =>
-      fs.delete(new Path(tdir, s"manifest-$id"), false)
-    }
-    // Orphaned replace-swap sidecars below the floor are history too —
-    // readManifest would otherwise resurrect them as manifests on the
-    // next open (they don't match the manifest-\d+ filters above).
-    entries.map(_.getPath.getName)
-      .filter(_.matches("manifest-\\d+\\.old"))
-      .filter(_.stripPrefix("manifest-").stripSuffix(".old").toLong < floor)
-      .foreach(n => fs.delete(new Path(tdir, n), false))
-    entries.map(_.getPath.getName)
-      .filter(n => n.startsWith("snap-") && !referenced.contains(n))
-      .foreach(n => fs.delete(new Path(tdir, n), true))
+    // orphaned replace-swap sidecars below the floor are history too
+    toDelete.flatMap(id => Seq(s"manifest-$id", s"manifest-$id.old"))
+      .filter(v.has).foreach(n => v.fs.delete(v.path(n), false))
+    v.names.filter(n => n.startsWith("snap-") && !referenced.contains(n))
+      .foreach(n => v.fs.delete(v.path(n), true))
   }
 
   /** One multi-path scan over exactly the `bucket=` leaf directories the
@@ -613,16 +589,16 @@ class ParquetUpsertStore(root: String, numBuckets: Int = 16,
     * compaction/rebucket never materialized (zero live rows) — but a
     * referenced snapshot DIRECTORY that is gone is data loss and stays
     * a loud error, exactly as the former whole-directory read made it. */
-  private def readBuckets(spark: SparkSession, tdir: String,
+  private def readBuckets(spark: SparkSession, fs: FileSystem, tdir: String,
                           mapping: Map[Int, String],
                           buckets: Set[Int], nb: Int): DataFrame = {
-    val fs = new Path(tdir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val byDir = mapping.filter { case (b, _) => buckets.contains(b) }
       .groupBy(_._2).view.mapValues(_.keySet).toMap
     val paths = byDir.toSeq.sortBy(_._1).flatMap { case (dir, bs) =>
-      val present = fs.listStatus(new Path(s"$tdir/$dir")).iterator
-        .map(_.getPath.getName).filter(_.startsWith("bucket=")).toSet
-      bs.toSeq.sorted.map(b => s"bucket=$b").filter(present)
+      val snap = CommitLog.list(fs, s"$tdir/$dir")
+      if (!snap.exists) throw new java.io.FileNotFoundException(
+        s"snapshot directory ${snap.dir} referenced by the manifest is missing")
+      bs.toSeq.sorted.map(b => s"bucket=$b").filter(snap.has)
         .map(n => s"$tdir/$dir/$n")
     }
     if (paths.isEmpty)
@@ -658,36 +634,43 @@ object ParquetUpsertStore {
   private[sinks] def tableDir(root: String, table: String): String =
     root + "/" + table.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  /** Ids of every committed manifest of the table at `tdir` (empty for a
-    * table that doesn't exist) — the sidecar artifacts' coverage oracle:
-    * [[KeyBloom.filterPresent]] refuses to prune when any committed
-    * batch lacks a bloom. Includes orphaned `.old` replace-swap sidecars
-    * (their ids are committed history a crashed swap merely hid). */
-  private[sinks] def committedManifestIds(fs: FileSystem, tdir: String): Seq[Long] =
-    try fs.listStatus(new Path(tdir)).toSeq
-      .map(_.getPath.getName)
-      .collect {
-        case n if n.matches("manifest-\\d+") =>
-          n.stripPrefix("manifest-").toLong
-        case n if n.matches("manifest-\\d+\\.old") =>
-          n.stripPrefix("manifest-").stripSuffix(".old").toLong
-      }.distinct
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
+  /** Ids of every committed manifest in the table view (empty for a
+    * table that doesn't exist). Includes orphaned `.old` replace-swap
+    * sidecars: their ids are committed history a crashed swap merely
+    * hid, and [[CommitLog.read]] restores them on first read. */
+  private[sinks] def committedIds(v: CommitLog.View): Seq[Long] =
+    (v.ids("manifest-") ++ v.ids("manifest-", ".old")).distinct.sorted
 
   /** The table's vacuum retention floor: the smallest manifest id that
     * survived the last vacuum — ids below it may have been deleted.
-    * Long.MinValue when never vacuumed (or no table). Falls back to the
-    * writer's tmp file so a crash between vacuum's delete and rename
-    * cannot silently disarm the floor. */
-  private[sinks] def readFloor(fs: FileSystem, tdir: String): Long = {
-    def read(name: String): Option[Long] =
-      try {
-        val in = new BufferedReader(new InputStreamReader(
-          fs.open(new Path(tdir, name)), UTF_8))
-        try Some(in.readLine().trim.toLong) finally in.close()
-      } catch { case _: java.io.IOException => None }
-    read("vacuum-floor").orElse(read(".vacuum-floor.tmp"))
-      .getOrElse(Long.MinValue)
+    * Long.MinValue when never vacuumed (or no table). Reads the tmp
+    * file when the floor's rename never landed, so a crashed vacuum
+    * cannot silently disarm it (over-stating the floor only refuses). */
+  private[sinks] def readFloor(v: CommitLog.View): Long =
+    CommitLog.read(v, "vacuum-floor", "", tmpFallback = true)
+      .flatMap(_.headOption).fold(Long.MinValue)(_.trim.toLong)
+
+  /** THE coverage rule every sidecar's pruning rests on ([[KeyBloom]]'s
+    * miss fast path, [[SecondaryIndex]]'s index-first lookups): an
+    * artifact may prune a read at horizon `atOrBefore` only if
+    *   - every committed id up to the horizon is covered by its `fold`
+    *     (the last compaction's id) or by a per-batch `marker` —
+    *     partial adoption or a swallowed per-batch write fails this;
+    *   - a vacuumed table (floor armed) has a fold at or above the
+    *     floor: the deleted manifests may have been uncovered, and
+    *     their ids are no longer listable, so the id check alone would
+    *     pass vacuously;
+    *   - the horizon is not below the fold: compaction rebuilt the
+    *     artifact from the live snapshot at the fold, so older
+    *     horizons' dead-since keys may be missing from it. */
+  private[sinks] def coverageSound(v: CommitLog.View, fold: Option[Long],
+                                   markers: Set[Long],
+                                   atOrBefore: Option[Long]): Boolean = {
+    val floor = readFloor(v)
+    committedIds(v).filter(id => atOrBefore.forall(id <= _))
+      .forall(id => fold.exists(id <= _) || markers.contains(id)) &&
+      (floor == Long.MinValue || fold.exists(_ >= floor)) &&
+      fold.forall(f => atOrBefore.forall(f <= _))
   }
 
   /** Driver-side twin of the write path's `pmod(hash(row_key), nb)`:
@@ -701,82 +684,28 @@ object ParquetUpsertStore {
     ((h % nb) + nb) % nb
   }
 
-  /** Parsed-manifest cache keyed on (path, mtime, length) — committed
-    * manifests are immutable EXCEPT replace-commits (compact/rebucket
-    * re-commit the same id via tmp+rename, which always changes the
-    * file's mtime and, in practice, its length), so the key goes stale
-    * exactly when the content does. The win is per-phase: every store
-    * lifecycle step (apply, snapshot, lookup, diff, coverage checks)
-    * re-resolves the live manifest, and on an object store each re-read
-    * is a metadata round-trip (guide §5); in-process replace-commits
-    * additionally invalidate by path. Bounded: cleared wholesale past a
-    * size no realistic table count reaches (entries are tiny). */
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Manifest]()
-
-  /** Highest-id committed manifest (optionally capped at `atOrBefore` for
-    * time travel), or None for a table that doesn't exist. */
-  private[sinks] def readManifest(fs: FileSystem, tdir: String,
-                                  atOrBefore: Option[Long] = None): Option[Manifest] = {
-    val dir = new Path(tdir)
-    val names =
-      try fs.listStatus(dir).map(_.getPath.getName).toSeq
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    // Crash recovery for a replace-commit that died between its two
-    // renames: a `manifest-<id>.old` sidecar whose target manifest is
-    // missing IS the manifest for that id — restore it before picking
-    // the latest. Concurrent readers may race on the rename; the loser's
-    // rename fails and the id is visible either way.
-    val restored = names
-      .filter(_.matches("manifest-\\d+\\.old"))
-      .map(_.stripSuffix(".old"))
-      .filter(t => !names.contains(t) &&
-        fs.rename(new Path(dir, t + ".old"), new Path(dir, t)))
-    val latest = (names ++ restored).iterator
-      .filter(_.matches("manifest-\\d+"))
-      .map(n => n.stripPrefix("manifest-").toLong)
-      .filter(id => atOrBefore.forall(id <= _))
-      .foldLeft(Option.empty[Long])((acc, v) => Some(acc.fold(v)(math.max(_, v))))
-    latest.map { id =>
-      val p = new Path(dir, s"manifest-$id")
-      val st = fs.getFileStatus(p)
-      val key = (p.toString, st.getModificationTime, st.getLen)
-      val cached = manifestCache.get(key)
-      if (cached != null) cached
-      else {
-        val in = new BufferedReader(new InputStreamReader(fs.open(p), UTF_8))
-        val m = try {
-          val header = in.readLine().split(" ")
-          require(header(0) == "graft-upsert-manifest", s"bad manifest header in $tdir")
-          val nb = header(1).toInt
-          val schemaJson = Option(in.readLine()).filter(_ != "-")
-          val buckets = Iterator.continually(in.readLine()).takeWhile(_ != null)
-            .filter(_.nonEmpty)
-            .map { line =>
-              val Array(b, d) = line.split("\t", 2)
-              b.toInt -> d
-            }.toMap
-          Manifest(nb, schemaJson, buckets)
-        } finally in.close()
-        if (manifestCache.size > 8192) manifestCache.clear()
-        manifestCache.put(key, m)
-        m
-      }
+  /** Highest-id committed manifest in the view (optionally capped at
+    * `atOrBefore` for time travel), or None for a table that doesn't
+    * exist. Parsed on every call: a replace-commit rewrites a
+    * manifest in place, so no cache keyed on file metadata can tell a
+    * stale parse from a current one across processes. */
+  private[sinks] def readManifest(v: CommitLog.View,
+                                  atOrBefore: Option[Long] = None): Option[Manifest] =
+    committedIds(v).filter(id => atOrBefore.forall(id <= _)).lastOption.map { id =>
+      val lines = CommitLog.read(v, s"manifest-$id", "graft-upsert-manifest ")
+        .getOrElse(throw new java.io.FileNotFoundException(
+          s"manifest-$id vanished from ${v.dir}"))
+      Manifest(lines.head.split(" ")(1).toInt, lines.lift(1).filter(_ != "-"),
+        lines.drop(2).filter(_.nonEmpty).map { line =>
+          val Array(b, d) = line.split("\t", 2)
+          b.toInt -> d
+        }.toMap)
     }
-  }
 
-  /** Write manifest-<id> via tmp-file + atomic rename (the commit point).
-    * A failed rename means the id is already committed (a replay) — the
-    * content is identical by construction, so it is dropped. `replace`
-    * (compaction's re-commit of an existing id) first moves the live
-    * manifest aside to a `manifest-<id>.old` sidecar (not matching the
-    * committed-manifest name pattern, so normal reads ignore it) and
-    * removes the sidecar only after the new manifest's rename succeeds.
-    * A crash between the two renames leaves only the sidecar on disk;
-    * [[readManifest]] restores such an orphaned sidecar to its manifest
-    * name on the next open, so the id's content survives the crash (it
-    * is merely invisible until then), and [[vacuum]] deletes sidecars
-    * below its retention floor. */
+  /** Commit manifest-<id> — the commit point. Create-once for a batch
+    * (a lost rename is a replay of identical content); `replace` for
+    * compaction's and rebucket's re-commit of an existing id, whose
+    * crash window [[CommitLog]] recovers. */
   private[sinks] def commitManifest(fs: FileSystem, tdir: String, id: Long,
                                     m: Manifest, replace: Boolean = false): Unit = {
     val text = new StringBuilder()
@@ -785,19 +714,6 @@ object ParquetUpsertStore {
     m.buckets.toSeq.sortBy(_._1).foreach { case (b, d) =>
       text.append(b).append('\t').append(d).append('\n')
     }
-    val tmp = new Path(tdir, s".manifest-$id.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(text.toString.getBytes(UTF_8)) finally out.close()
-    val target = new Path(tdir, s"manifest-$id")
-    // in-process invalidation for replace-commits (cross-process
-    // staleness is covered by the cache key's mtime+length)
-    manifestCache.keySet.removeIf(_._1 == target.toString)
-    if (replace) {
-      val sidecar = new Path(tdir, s"manifest-$id.old")
-      fs.delete(sidecar, false) // stale sidecar from an earlier crashed swap
-      if (fs.exists(target)) fs.rename(target, sidecar)
-      if (fs.rename(tmp, target)) fs.delete(sidecar, false)
-      else { fs.delete(tmp, false); fs.rename(sidecar, target) }
-    } else if (!fs.rename(tmp, target)) fs.delete(tmp, false)
+    CommitLog.publishText(fs, tdir, s"manifest-$id", text.toString, replace)
   }
 }

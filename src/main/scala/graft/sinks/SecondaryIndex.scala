@@ -4,9 +4,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.io.{BufferedReader, InputStreamReader}
-import java.nio.charset.StandardCharsets.UTF_8
-
 /** Append-only SECONDARY INDEX over a [[ParquetUpsertStore]] table: a
   * postings table `value → row_key` for one envelope values column,
   * maintained per applied batch, so a selective predicate on a NON-key
@@ -117,12 +114,10 @@ object SecondaryIndex {
     * planning paths' existence oracle. On an object store each exists
     * probe is a metadata round-trip; with k equality conjuncts the
     * per-lookup cost would be k singles + C(k,2) pair probes, so the
-    * single listStatus answers them all. */
+    * single listing answers them all. */
   private def indexDirNames(fs: FileSystem, root: String,
                             table: String): Set[String] =
-    try fs.listStatus(new Path(s"$root/__index/${safe(table)}"))
-      .iterator.map(_.getPath.getName).toSet
-    catch { case _: java.io.FileNotFoundException => Set.empty }
+    CommitLog.list(fs, s"$root/__index/${safe(table)}").names
 
   /** The indexed value of `column` in a live envelope row: the raw map
     * entry for a single column; for a composite target, the members'
@@ -148,18 +143,15 @@ object SecondaryIndex {
 
   /** Named error instead of Spark's path-not-found when a lookup hits a
     * column that was never indexed (the V1 config-validation posture). */
-  private def requireIndexed(fs: FileSystem, dir: String, table: String,
+  private def requireIndexed(st: IndexState, table: String,
                              column: String): Unit =
-    require(fs.exists(new Path(dir)),
+    require(st.view.exists,
       s"SecondaryIndex: no index exists for '$table.$column' — run " +
         "indexBatch per applied batch (or compact once) before looking up")
 
   // ---------------------------------------------------------------------
   // generation pointers (the manifest-log discipline) + coverage markers
   // ---------------------------------------------------------------------
-
-  private val GenName = "_gen-(\\d+)".r
-  private val CoverName = "_cover-(\\d+)".r
 
   /** Postings statistics recorded in the pointer at compaction time:
     * total row count and rows per value bucket. Ordering metadata ONLY
@@ -174,126 +166,89 @@ object SecondaryIndex {
   private def genPath(dir: String, n: Long): String = s"$dir/gen-$n"
 
   /** Everything the driver needs about an index, from ONE directory
-    * listing: current pointer, coverage markers, orphan generation
-    * numbers (crashed compactions). */
-  private final case class IndexState(pointer: Option[Pointer],
-                                      covers: Set[Long],
-                                      genNumbers: Set[Long],
-                                      pointerNumbers: Set[Long])
-
-  private def readPointerFile(fs: FileSystem, dir: String,
-                              n: Long): Option[Pointer] =
-    try {
-      val in = new BufferedReader(new InputStreamReader(
-        fs.open(new Path(dir, s"_gen-$n")), UTF_8))
-      try {
-        val header = in.readLine()
-        require(header != null && header.startsWith("graft-secondary-index-gen"),
-          s"bad secondary-index generation header in $dir/_gen-$n")
-        val lines = Iterator.continually(in.readLine()).takeWhile(_ != null)
-          .toSeq
-        val cov = lines
-          .collectFirst { case l if l.startsWith("covered_through ") =>
-            l.stripPrefix("covered_through ").trim }
-          .filter(_ != "-").map(_.toLong)
-        val rows = lines.collectFirst {
-          case l if l.startsWith("rows ") => l.stripPrefix("rows ").trim.toLong
-        }
-        val byVb = lines.collectFirst {
-          case l if l.startsWith("bucket_rows ") =>
-            l.stripPrefix("bucket_rows ").trim.split(",").iterator
-              .filter(_.nonEmpty).map { kv =>
-                val Array(b, c) = kv.split(":", 2)
-                b.toInt -> c.toLong
-              }.toMap
-        }
-        Some(Pointer(n, cov, rows.map(r => GenStats(r, byVb.getOrElse(Map.empty)))))
-      } finally in.close()
-    } catch { case _: java.io.IOException => None }
-
-  private def readState(fs: FileSystem, dir: String): IndexState = {
-    val names =
-      try fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    val ptrNums = names.collect { case GenName(n) => n.toLong }
-    val covers = names.collect { case CoverName(id) => id.toLong }.toSet
-    val gens = names.collect {
-      case n if n.startsWith("gen-") && n.stripPrefix("gen-").forall(_.isDigit) =>
-        n.stripPrefix("gen-").toLong
-    }.toSet
-    val ptr = ptrNums.sorted.reverseIterator
-      .flatMap(readPointerFile(fs, dir, _)).nextOption()
-    IndexState(ptr, covers, gens, ptrNums.toSet)
+    * listing: current pointer, coverage markers, generation and
+    * pointer numbers (orphans of crashed compactions included), and
+    * the recorded layout, read on first use. */
+  private final class IndexState(val view: CommitLog.View) {
+    val pointerNumbers: Seq[Long] = view.ids("_gen-")
+    val pointer: Option[Pointer] =
+      pointerNumbers.reverseIterator.flatMap(readPointer(view, _)).nextOption()
+    val covers: Set[Long] = view.ids("_cover-").toSet
+    val genNumbers: Set[Long] = view.ids("gen-").toSet
+    def current: Long = pointer.fold(0L)(_.n)
+    lazy val layout: Option[Int] = CommitLog.read(view, "_layout",
+      "graft-secondary-index").flatMap(_.collectFirst {
+        case l if l.startsWith("value_buckets ") =>
+          l.stripPrefix("value_buckets ").trim.toInt })
+    def valueBuckets: Int = layout.getOrElse(DefaultValueBuckets)
   }
 
-  /** Commit `_gen-<n>` via tmp + rename-to-a-NEW-name — atomic create,
-    * never a delete a concurrent reader could observe. A failed rename
-    * means the number is already committed (a replay): fine. */
+  private def readState(fs: FileSystem, dir: String): IndexState =
+    new IndexState(CommitLog.list(fs, dir))
+
+  private def readPointer(v: CommitLog.View, n: Long): Option[Pointer] =
+    CommitLog.read(v, s"_gen-$n", "graft-secondary-index-gen").map { lines =>
+      def field(k: String) = lines.collectFirst {
+        case l if l.startsWith(k + " ") => l.stripPrefix(k + " ").trim }
+      val stats = field("rows").map(r => GenStats(r.toLong,
+        field("bucket_rows").toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+          .map { kv =>
+            val Array(b, c) = kv.split(":", 2)
+            b.toInt -> c.toLong
+          }.toMap))
+      Pointer(n, field("covered_through").filter(_ != "-").map(_.toLong), stats)
+    }
+
+  /** Commit `_gen-<n>` create-once — an atomic create, never a delete a
+    * concurrent reader could observe; a lost rename is a replay. */
   private def commitPointer(fs: FileSystem, dir: String, n: Long,
                             coveredThrough: Option[Long],
                             stats: Option[GenStats] = None): Unit = {
-    val tmp = new Path(dir, s"._gen-$n.tmp")
-    val out = fs.create(tmp, true)
     val statLines = stats.fold("") { st =>
       s"rows ${st.rows}\n" + "bucket_rows " + st.bucketRows.toSeq.sorted
         .map { case (b, c) => s"$b:$c" }.mkString(",") + "\n"
     }
-    try out.write(("graft-secondary-index-gen 1\n" +
-      s"covered_through ${coveredThrough.fold("-")(_.toString)}\n" +
-      statLines).getBytes(UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, new Path(dir, s"_gen-$n"))) fs.delete(tmp, false)
+    CommitLog.publishText(fs, dir, s"_gen-$n", "graft-secondary-index-gen 1\n" +
+      s"covered_through ${coveredThrough.fold("-")(_.toString)}\n" + statLines)
   }
 
-  /** Record (first writer) or read back the layout's bucket count, and
-    * make sure a generation pointer exists. A layout that can neither
-    * be committed nor read back fails LOUDLY: proceeding with the
-    * caller's parameter could fork the bucket count between writers —
-    * postings scattered into wrong vb partitions, silent permanent
-    * false negatives. */
+  /** Record (first writer wins) or read back the layout's bucket count,
+    * and make sure a generation pointer exists; returns the index state.
+    * A layout that can neither be committed nor read back fails
+    * LOUDLY: proceeding with the caller's parameter could fork the
+    * bucket count between writers — postings scattered into wrong vb
+    * partitions, silent permanent false negatives. */
   private def ensureLayout(fs: FileSystem, dir: String,
-                           valueBuckets: Int): Int = {
+                           valueBuckets: Int): IndexState = {
     require(valueBuckets > 0,
       s"valueBuckets must be positive, got $valueBuckets")
-    fs.mkdirs(new Path(dir))
-    val nb = readLayout(fs, dir).getOrElse {
-      val tmp = new Path(dir, "._layout.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"graft-secondary-index 2\nvalue_buckets $valueBuckets\n"
-        .getBytes(UTF_8))
-      finally out.close()
-      // first-writer-wins: a losing rename means a concurrent writer
-      // committed the layout — read theirs.
-      if (!fs.rename(tmp, new Path(dir, "_layout"))) fs.delete(tmp, false)
-      readLayout(fs, dir).getOrElse(throw new java.io.IOException(
-        s"SecondaryIndex: cannot commit or read back _layout in $dir — " +
-          "refusing to proceed with an unrecorded bucket count"))
+    val first = readState(fs, dir)
+    val st = if (first.layout.nonEmpty) first else {
+      // first writer wins: a lost rename means another writer's layout
+      CommitLog.publishText(fs, dir, "_layout",
+        s"graft-secondary-index 2\nvalue_buckets $valueBuckets\n")
+      readState(fs, dir)
     }
-    if (readState(fs, dir).pointer.isEmpty) commitPointer(fs, dir, 0L, None)
-    nb
+    if (st.layout.isEmpty) throw new java.io.IOException(
+      s"SecondaryIndex: cannot commit or read back _layout in $dir — " +
+        "refusing to proceed with an unrecorded bucket count")
+    if (st.pointer.isEmpty) commitPointer(fs, dir, 0L, None)
+    st
   }
 
-  private def readLayout(fs: FileSystem, dir: String): Option[Int] =
-    try {
-      val in = new BufferedReader(new InputStreamReader(
-        fs.open(new Path(dir, "_layout")), UTF_8))
-      try {
-        val header = in.readLine()
-        require(header != null && header.startsWith("graft-secondary-index"),
-          s"bad secondary-index layout header in $dir")
-        Iterator.continually(in.readLine()).takeWhile(_ != null)
-          .collectFirst { case l if l.startsWith("value_buckets ") =>
-            l.stripPrefix("value_buckets ").trim.toInt }
-      } finally in.close()
-    } catch { case _: java.io.IOException => None }
+  /** Per-batch appends not yet folded by a compaction (one `_cover`
+    * marker each) — [[StoreMaintenance.auto]]'s trigger. */
+  private[sinks] def unfoldedBatches(spark: SparkSession, root: String,
+                                     table: String, column: String): Int =
+    CommitLog.list(fsOf(spark, root), indexDir(root, table, column))
+      .ids("_cover-").size
 
   /** Current postings directory — the test/observability hook for plan
     * and file-count assertions against the LIVE generation. */
   private[graft] def postingsDir(spark: SparkSession, root: String,
                                  table: String, column: String): String = {
     val dir = indexDir(root, table, column)
-    val st = readState(fsOf(spark, root), dir)
-    genPath(dir, st.pointer.fold(0L)(_.n))
+    genPath(dir, readState(fsOf(spark, root), dir).current)
   }
 
   /** Full postings of the CURRENT generation (compacted base ∪ the
@@ -301,10 +256,8 @@ object SecondaryIndex {
     * read hook; empty frame when the generation doesn't exist yet. */
   private[graft] def readPostings(spark: SparkSession, root: String,
                                   table: String, column: String): DataFrame = {
-    val dir = indexDir(root, table, column)
-    val fs = fsOf(spark, root)
-    val st = readState(fs, dir)
-    readGenPostings(spark, fs, dir, st.pointer.fold(0L)(_.n))
+    val st = readState(fsOf(spark, root), indexDir(root, table, column))
+    readGenPostings(spark, st)
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], postingsSchema))
   }
@@ -314,30 +267,14 @@ object SecondaryIndex {
   // ---------------------------------------------------------------------
 
   /** True iff every batch whose rows can be live at the read horizon is
-    * provably indexed. Three ways to lose soundness, each detected from
-    * metadata-sized driver reads:
-    *   - a committed manifest id with neither a `_cover` marker nor a
-    *     compaction (`covered_through`) subsuming it — partial adoption
-    *     or a swallowed indexBatch;
-    *   - a vacuumed store ([[ParquetUpsertStore.readFloor]] armed) with
-    *     no compaction at or above the floor: the deleted manifests may
-    *     have been uncovered, and their ids are no longer listable, so
-    *     the manifest cross-check alone would pass vacuously;
-    *   - a time-travel read below `covered_through`: compaction
-    *     re-stamps every folded posting at its own id, so older
-    *     horizons can no longer be batch-bounded. */
-  private def coverageSound(fs: FileSystem, st: IndexState, root: String,
-                            table: String, atOrBefore: Option[Long]): Boolean = {
-    val covT = st.pointer.flatMap(_.coveredThrough)
-    val tdir = ParquetUpsertStore.tableDir(root, table)
-    val committed = ParquetUpsertStore.committedManifestIds(fs, tdir)
-      .filter(id => atOrBefore.forall(id <= _))
-    val covered = (id: Long) => covT.exists(id <= _) || st.covers.contains(id)
-    val floor = ParquetUpsertStore.readFloor(fs, tdir)
-    committed.forall(covered) &&
-      (floor == Long.MinValue || covT.exists(_ >= floor)) &&
-      covT.forall(ct => atOrBefore.forall(ct <= _))
-  }
+    * provably indexed — the store's one coverage rule
+    * ([[ParquetUpsertStore.coverageSound]]) with this index's
+    * compaction (`covered_through`) as the fold and its `_cover`
+    * markers as the per-batch evidence. */
+  private def coverageSound(table: CommitLog.View, st: IndexState,
+                            atOrBefore: Option[Long]): Boolean =
+    ParquetUpsertStore.coverageSound(table,
+      st.pointer.flatMap(_.coveredThrough), st.covers, atOrBefore)
 
   private def warnUnpruned(table: String, column: String, why: String): Unit =
     System.err.println(s"SecondaryIndex: index-first pruning for " +
@@ -468,30 +405,26 @@ object SecondaryIndex {
     * no postings read pays footer schema inference, and both sides come
     * back column-identical. None when the generation directory itself
     * doesn't exist yet. */
-  private def readGenPostings(spark: SparkSession, fs: FileSystem,
-                              dir: String, n: Long): Option[DataFrame] = {
-    val gp = new Path(genPath(dir, n))
-    if (!fs.exists(gp)) return None
-    val base = spark.read.schema(postingsSchema).parquet(gp.toString)
+  private def readGenPostings(spark: SparkSession,
+                              st: IndexState): Option[DataFrame] = {
+    val dir = st.view.dir
+    val n = st.current
+    // a generation the listing missed may have landed since: only a
+    // directory that does not exist now means "no postings yet"
+    if (!st.view.has(s"gen-$n") && !st.view.fs.exists(new Path(genPath(dir, n))))
+      return None
+    val base = spark.read.schema(postingsSchema).parquet(genPath(dir, n))
     // The `_appends/` directory name is hidden from Spark's source
     // resolution (underscore prefix — which is what keeps the base read
     // of the generation from double-counting it), so the flush log is
     // read as explicit FILE paths from one listing; the files themselves
     // are ordinary part files.
-    val apFiles =
-      try fs.listStatus(new Path(appendsPath(dir, n))).iterator
-        .filter(s => s.isFile && {
-          val nm = s.getPath.getName
-          !nm.startsWith("_") && !nm.startsWith(".")
-        })
-        .map(_.getPath.toString).toSeq
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    val posts =
-      if (apFiles.nonEmpty)
-        base.unionByName(
-          spark.read.schema(postingsSchema).parquet(apFiles: _*))
-      else base
-    Some(posts)
+    val appends = CommitLog.list(st.view.fs, appendsPath(dir, n))
+    val apFiles = appends.names.toSeq.sorted
+      .filterNot(nm => nm.startsWith("_") || nm.startsWith("."))
+      .map(appends.path(_).toString)
+    Some(if (apFiles.isEmpty) base
+      else base.unionByName(spark.read.schema(postingsSchema).parquet(apFiles: _*)))
   }
 
   /** Run `body` against the CURRENT generation's postings (None = no
@@ -503,14 +436,16 @@ object SecondaryIndex {
     * compactions (the previous generation is retained as a grace
     * copy), and the sound response is to re-resolve, never to error or
     * answer empty. */
-  private def withPostings[T](spark: SparkSession, fs: FileSystem,
-                              dir: String)(body: Option[DataFrame] => T): T = {
+  private def withPostings[T](spark: SparkSession, first: IndexState)
+                             (body: Option[DataFrame] => T): T = {
+    val v = first.view
+    var st = first
     var attempt = 0
     while (true) {
       attempt += 1
-      val ptr = readState(fs, dir).pointer.getOrElse(Pointer(0L, None))
+      if (attempt > 1) st = readState(v.fs, v.dir)
       try {
-        return body(readGenPostings(spark, fs, dir, ptr.n))
+        return body(readGenPostings(spark, st))
       } catch {
         case e @ (_: StaleGeneration | _: org.apache.spark.SparkException |
                   _: java.io.FileNotFoundException) =>
@@ -525,12 +460,12 @@ object SecondaryIndex {
               Iterator.iterate(se: Throwable)(_.getCause)
                 .takeWhile(_ != null).take(16)
                 .exists(_.isInstanceOf[java.io.FileNotFoundException]) ||
-                readState(fs, dir).pointer.fold(0L)(_.n) != ptr.n
+                readState(v.fs, v.dir).current != st.current
           }
           if (!raceShaped) throw e
           if (attempt >= 5) e match {
             case _: StaleGeneration => throw new java.io.IOException(
-              s"SecondaryIndex: generation under $dir kept vanishing " +
+              s"SecondaryIndex: generation under ${v.dir} kept vanishing " +
                 "across retries — compactions are outpacing this reader")
             case other => throw other
           }
@@ -541,14 +476,13 @@ object SecondaryIndex {
 
   /** Candidate keys for one predicate, bounded by `maxKeys`; None when
     * the predicate matches more than `maxKeys` distinct keys. */
-  private def enumerate(spark: SparkSession, fs: FileSystem, dir: String,
-                        nb: Int, p: Pred, atOrBefore: Option[Long],
+  private def enumerate(spark: SparkSession, st: IndexState, p: Pred,
+                        atOrBefore: Option[Long],
                         maxKeys: Int): Option[Seq[String]] =
-    withPostings(spark, fs, dir) {
+    withPostings(spark, st) {
       case None => Some(Seq.empty)
       case Some(posts) =>
-        val horizon = atOrBefore.fold(postingsFilter(p, nb)(posts))(h =>
-          postingsFilter(p, nb)(posts).filter(col("batch") <= h))
+        val horizon = candidatePostings(posts, st, p, atOrBefore)
         val keys = graft.Label.job(spark, s"index.enumerate ${p.column}")(
           horizon.select(col("row_key")).distinct()
             .limit(maxKeys + 1).collect()).map(_.getString(0)).toSeq.sorted
@@ -562,18 +496,23 @@ object SecondaryIndex {
     * pin that post-compaction ordering is a metadata read. */
   private[graft] val probeJobs = new java.util.concurrent.atomic.AtomicLong()
 
-  private def probe(spark: SparkSession, fs: FileSystem, dir: String,
-                    nb: Int, p: Pred, atOrBefore: Option[Long],
-                    cap: Int): Long = {
+  private def probe(spark: SparkSession, st: IndexState, p: Pred,
+                    atOrBefore: Option[Long], cap: Int): Long = {
     probeJobs.incrementAndGet()
-    withPostings(spark, fs, dir) {
+    withPostings(spark, st) {
       case None => 0L
       case Some(posts) =>
-        val horizon = atOrBefore.fold(postingsFilter(p, nb)(posts))(h =>
-          postingsFilter(p, nb)(posts).filter(col("batch") <= h))
         graft.Label.job(spark, s"index.probe ${p.column}")(
-          horizon.limit(cap).count())
+          candidatePostings(posts, st, p, atOrBefore).limit(cap).count())
     }
+  }
+
+  /** The postings rows a predicate selects, batch-bounded under time
+    * travel. */
+  private def candidatePostings(posts: DataFrame, st: IndexState, p: Pred,
+                                atOrBefore: Option[Long]): DataFrame = {
+    val matching = postingsFilter(p, st.valueBuckets)(posts)
+    atOrBefore.fold(matching)(h => matching.filter(col("batch") <= h))
   }
 
   /** Conjunct-ordering cost, as METADATA where possible: the last
@@ -582,20 +521,21 @@ object SecondaryIndex {
     * other predicate's is the generation total — zero jobs. Appends
     * since the compaction drift the numbers (a heuristic, not a bound);
     * an index never compacted falls back to the probe job. */
-  private def orderCost(spark: SparkSession, fs: FileSystem, dir: String,
-                        nb: Int, p: Pred, atOrBefore: Option[Long],
-                        cap: Int): Long =
-    readState(fs, dir).pointer.flatMap(_.stats) match {
-      case Some(st) => p match {
+  private def orderCost(spark: SparkSession, st: IndexState, p: Pred,
+                        atOrBefore: Option[Long], cap: Int): Long = {
+    val nb = st.valueBuckets
+    st.pointer.flatMap(_.stats) match {
+      case Some(gs) => p match {
         case EqPred(_, v) =>
-          st.bucketRows.getOrElse(ParquetUpsertStore.bucketOf(v, nb), 0L)
+          gs.bucketRows.getOrElse(ParquetUpsertStore.bucketOf(v, nb), 0L)
         case InPred(_, vs) =>
           vs.map(v => ParquetUpsertStore.bucketOf(v, nb)).distinct
-            .map(b => st.bucketRows.getOrElse(b, 0L)).sum
-        case _ => st.rows
+            .map(b => gs.bucketRows.getOrElse(b, 0L)).sum
+        case _ => gs.rows
       }
-      case None => probe(spark, fs, dir, nb, p, atOrBefore, cap)
+      case None => probe(spark, st, p, atOrBefore, cap)
     }
+  }
 
   // ---------------------------------------------------------------------
   // maintenance: per-batch appends and reader-atomic compaction
@@ -698,8 +638,7 @@ object SecondaryIndex {
                  valueBuckets: Int = DefaultValueBuckets): Unit = {
     val dir = indexDir(root, table, column)
     val fs = fsOf(batch.sparkSession, root)
-    val nb = ensureLayout(fs, dir, valueBuckets)
-    val ptr = readState(fs, dir).pointer.getOrElse(Pointer(0L, None))
+    val st = ensureLayout(fs, dir, valueBuckets)
     graft.Label.job(batch.sparkSession, s"index.append $table b=$batchId")(
       shapeAppend(
         UpsertSink.dmlProjection(batch)
@@ -707,11 +646,11 @@ object SecondaryIndex {
           .filter(col("op") =!= graft.model.OpType.Delete)
           .select(col("row_key"), lit(batchId).as("batch"),
             valueExpr(column).as("v"))
-          .filter(col("v").isNotNull), nb)
+          .filter(col("v").isNotNull), st.valueBuckets)
         .write.mode("append")
-        .parquet(appendsPath(dir, ptr.n)))
+        .parquet(appendsPath(dir, st.current)))
     // coverage marker: claim AFTER the evidence is durable
-    fs.create(new Path(dir, s"_cover-$batchId"), true).close()
+    CommitLog.mark(fs, dir, s"_cover-$batchId")
   }
 
   /** COMPOSITE index maintenance: postings on the NUL-joined value PAIR
@@ -768,8 +707,7 @@ object SecondaryIndex {
               asBatch: Long): Unit = {
     val dir = indexDir(root, table, column)
     val fs = fsOf(spark, root)
-    val nb = ensureLayout(fs, dir, DefaultValueBuckets)
-    val st = readState(fs, dir)
+    val st = ensureLayout(fs, dir, DefaultValueBuckets)
     val ptr = st.pointer.getOrElse(Pointer(0L, None))
     val newN = (st.genNumbers ++ st.pointerNumbers + ptr.n).max + 1
     // The fold horizon is CLAMPED to the last committed manifest id: an
@@ -780,18 +718,18 @@ object SecondaryIndex {
     // empty-so-far snapshot cannot rebuild. With nothing committed yet
     // the rebuild is empty, EVERY posting is carried verbatim, and no
     // new coverage is claimed.
-    val committedMax = ParquetUpsertStore.committedManifestIds(fs,
-      ParquetUpsertStore.tableDir(root, table)).maxOption
+    val tview = store.view(spark, table)
+    val committedMax = ParquetUpsertStore.committedIds(tview).lastOption
     val asb: Long = committedMax.fold(Long.MinValue)(math.min(asBatch, _))
-    val later = readGenPostings(spark, fs, dir, ptr.n)
+    val later = readGenPostings(spark, st)
       .map(_.filter(col("batch") > asb)
         .select(col("row_key"), col("batch"), col("v")))
-    val rebuilt = store.snapshotAt(spark, table, asb)
+    val rebuilt = store.snapshotIn(spark, tview, Some(asb))
       .select(col("row_key"), lit(asb).as("batch"),
         valueExpr(column).as("v"))
       .filter(col("v").isNotNull)
     graft.Label.job(spark, s"index.compact-rebuild $table asBatch=$asb")(
-      shapeBase(later.fold(rebuilt)(rebuilt.unionByName(_)), nb)
+      shapeBase(later.fold(rebuilt)(rebuilt.unionByName(_)), st.valueBuckets)
         .write.mode("overwrite").partitionBy("vb").parquet(genPath(dir, newN)))
     // covered_through never regresses: an older-id re-compaction carries
     // the later-stamped postings forward, so prior coverage still holds.
@@ -818,7 +756,7 @@ object SecondaryIndex {
     // generations two-or-more behind, superseded pointers, folded covers
     (committed.genNumbers - ptr.n - newN)
       .foreach(n => fs.delete(new Path(genPath(dir, n)), true))
-    (committed.pointerNumbers - newN)
+    committed.pointerNumbers.filter(_ != newN)
       .foreach(n => fs.delete(new Path(dir, s"_gen-$n"), false))
     covT.foreach(ct => committed.covers.filter(_ <= ct)
       .foreach(id => fs.delete(new Path(dir, s"_cover-$id"), false)))
@@ -827,10 +765,8 @@ object SecondaryIndex {
     // the generation-resolved paths — an upgraded index runs DEGRADED
     // (unpruned, loud) until this first compact rebuilds full coverage
     // from the snapshot, at which point the orphans are removed here.
-    try fs.listStatus(new Path(dir)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("vb="))
-      .foreach(s => fs.delete(s.getPath, true))
-    catch { case _: java.io.FileNotFoundException => () }
+    committed.view.names.filter(_.startsWith("vb="))
+      .foreach(n => fs.delete(committed.view.path(n), true))
   }
 
   // ---------------------------------------------------------------------
@@ -838,28 +774,27 @@ object SecondaryIndex {
   // ---------------------------------------------------------------------
 
   private def scanFallback(spark: SparkSession, store: ParquetUpsertStore,
-                           table: String, preds: Seq[Pred],
+                           tview: CommitLog.View, preds: Seq[Pred],
                            atOrBefore: Option[Long]): DataFrame =
-    preds.foldLeft(atOrBefore.fold(store.snapshot(spark, table))(
-      store.snapshotAt(spark, table, _)))(verify)
+    preds.foldLeft(store.snapshotIn(spark, tview, atOrBefore))(verify)
 
   /** The single-predicate lookup core: coverage-checked index-first
     * candidates + verified point lookup, or the loud unpruned fallback. */
   private def lookupOne(spark: SparkSession, store: ParquetUpsertStore,
                         root: String, table: String, p: Pred,
                         atOrBefore: Option[Long], maxKeys: Int): DataFrame = {
-    val dir = indexDir(root, table, p.column)
-    val fs = fsOf(spark, root)
-    requireIndexed(fs, dir, table, p.column)
-    val st = readState(fs, dir)
-    if (!coverageSound(fs, st, root, table, atOrBefore)) {
+    // table first: a batch committed in this view wrote its `_cover`
+    // marker before its commit, so the index listing below sees it
+    val tview = store.view(spark, table)
+    val st = readState(fsOf(spark, root), indexDir(root, table, p.column))
+    requireIndexed(st, table, p.column)
+    if (!coverageSound(tview, st, atOrBefore)) {
       warnUnpruned(table, p.column, "coverage gap or collapsed history")
-      return scanFallback(spark, store, table, Seq(p), atOrBefore)
+      return scanFallback(spark, store, tview, Seq(p), atOrBefore)
     }
-    val nb = readLayout(fs, dir).getOrElse(DefaultValueBuckets)
-    enumerate(spark, fs, dir, nb, p, atOrBefore, maxKeys) match {
+    enumerate(spark, st, p, atOrBefore, maxKeys) match {
       case Some(keys) =>
-        verify(store.lookup(spark, table, keys, atOrBefore), p)
+        verify(store.lookupIn(spark, tview, keys, atOrBefore), p)
       case None => throw new IllegalArgumentException(
         s"SecondaryIndex: ${p.describe} of '$table' matches more than " +
           s"$maxKeys candidate keys — too popular for an index-first point " +
@@ -923,21 +858,37 @@ object SecondaryIndex {
     * NO conjunct fits. */
   private val IntersectStop = 4096
 
-  private def intersectCandidates(spark: SparkSession, fs: FileSystem,
-                                  root: String, table: String,
-                                  ordered: Seq[Pred], atOrBefore: Option[Long],
+  private def intersectCandidates(spark: SparkSession,
+                                  ordered: Seq[(Pred, IndexState)],
+                                  atOrBefore: Option[Long],
                                   maxKeys: Int): Option[Seq[String]] = {
     var acc: Option[Set[String]] = None
     val it = ordered.iterator
     while (it.hasNext && acc.forall(_.size > IntersectStop)) {
-      val p = it.next()
-      val dir = indexDir(root, table, p.column)
-      val nb = readLayout(fs, dir).getOrElse(DefaultValueBuckets)
-      enumerate(spark, fs, dir, nb, p, atOrBefore, maxKeys).foreach { ks =>
+      val (p, st) = it.next()
+      enumerate(spark, st, p, atOrBefore, maxKeys).foreach { ks =>
         acc = Some(acc.fold(ks.toSet)(_.intersect(ks.toSet)))
       }
     }
     acc.map(_.toSeq.sorted)
+  }
+
+  /** The conjuncts (composite pairs included) whose index coverage is
+    * sound against `tview`, cheapest-first — one listing per index
+    * directory, shared by the coverage check, the ordering and the
+    * enumeration. */
+  private def soundOrdered(spark: SparkSession, root: String, table: String,
+                           tview: CommitLog.View, indexed: Seq[Pred],
+                           atOrBefore: Option[Long],
+                           maxKeys: Int): Seq[(Pred, IndexState)] = {
+    val states = indexed.map(_.column).distinct.map(c =>
+      c -> readState(fsOf(spark, root), indexDir(root, table, c))).toMap
+    val sound = indexed.map(p => p -> states(p.column))
+      .filter { case (_, st) => coverageSound(tview, st, atOrBefore) }
+    if (sound.lengthCompare(1) <= 0) sound
+    else sound.map { case ps @ (p, st) =>
+      ps -> orderCost(spark, st, p, atOrBefore, maxKeys + 1)
+    }.sortBy(_._2).map(_._1)
   }
 
   /** Live rows satisfying EVERY given predicate, index-first. Planning
@@ -964,8 +915,7 @@ object SecondaryIndex {
     val preds: Seq[Pred] =
       equalTo.toSeq.map { case (c, v) => EqPred(c, v) } ++
         inRange.toSeq.map { case (c, (lo, hi)) => RangePred(c, lo, hi) }
-    val fs = fsOf(spark, root)
-    val names = indexDirNames(fs, root, table)
+    val names = indexDirNames(fsOf(spark, root), root, table)
     // composite pair indexes join the candidate pool: when every single
     // conjunct is too popular, a selective PAIR still bounds the lookup
     val pairs = compositePreds(names, equalTo.toSeq)
@@ -979,31 +929,22 @@ object SecondaryIndex {
         s"SecondaryIndex: no index exists for '$table.${p.column}' - run " +
           "indexBatch per applied batch (or compact once) before looking up")
     }
-    val withPairs = preds ++ pairs
-    val sound = withPairs.filter { p =>
-      val dir = indexDir(root, table, p.column)
-      coverageSound(fs, readState(fs, dir), root, table, atOrBefore)
-    }
-    if (sound.isEmpty) {
+    val tview = store.view(spark, table)
+    val ordered = soundOrdered(spark, root, table, tview, preds ++ pairs,
+      atOrBefore, maxKeys)
+    if (ordered.isEmpty) {
       warnUnpruned(table, preds.map(_.column).mkString(","),
         "no conjunct has sound coverage")
-      return scanFallback(spark, store, table, preds, atOrBefore)
+      return scanFallback(spark, store, tview, preds, atOrBefore)
     }
-    val ordered =
-      if (sound.lengthCompare(1) == 0) sound
-      else sound.map { p =>
-        val dir = indexDir(root, table, p.column)
-        val nb = readLayout(fs, dir).getOrElse(DefaultValueBuckets)
-        p -> orderCost(spark, fs, dir, nb, p, atOrBefore, maxKeys + 1)
-      }.sortBy(_._2).map(_._1)
-    val candidates = intersectCandidates(spark, fs, root, table, ordered,
+    val candidates = intersectCandidates(spark, ordered,
       atOrBefore, maxKeys).getOrElse(throw new IllegalArgumentException(
       s"SecondaryIndex: every conjunct of " +
         preds.map(_.describe).mkString("(", " AND ", ")") +
         s" on '$table' matches more than $maxKeys candidate keys — too " +
         "popular for an index-first point lookup; filter the snapshot " +
         "instead"))
-    preds.foldLeft(store.lookup(spark, table, candidates, atOrBefore))(verify)
+    preds.foldLeft(store.lookupIn(spark, tview, candidates, atOrBefore))(verify)
   }
 
   // ---------------------------------------------------------------------
@@ -1030,18 +971,8 @@ object SecondaryIndex {
       preds.collect { case EqPred(c, v) => c -> v })
     val indexed = pairs ++ preds.filter(p =>
       names.contains(indexDirName(p.column)))
-    val sound = indexed.filter { p =>
-      val dir = indexDir(root, table, p.column)
-      coverageSound(fs, readState(fs, dir), root, table, atOrBefore)
-    }
-    if (sound.isEmpty) return None
-    val ordered =
-      if (sound.lengthCompare(1) == 0) sound
-      else sound.map { p =>
-        val dir = indexDir(root, table, p.column)
-        val nb = readLayout(fs, dir).getOrElse(DefaultValueBuckets)
-        p -> orderCost(spark, fs, dir, nb, p, atOrBefore, maxKeys + 1)
-      }.sortBy(_._2).map(_._1)
-    intersectCandidates(spark, fs, root, table, ordered, atOrBefore, maxKeys)
+    val tview = CommitLog.list(fs, ParquetUpsertStore.tableDir(root, table))
+    intersectCandidates(spark, soundOrdered(spark, root, table, tview, indexed,
+      atOrBefore, maxKeys), atOrBefore, maxKeys)
   }
 }

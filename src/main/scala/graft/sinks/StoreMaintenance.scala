@@ -1,6 +1,5 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** One-call maintenance for a store table AND its sidecar artifacts —
@@ -69,18 +68,9 @@ object StoreMaintenance {
            vacuumRetainBatches: Long = -1L): Boolean = {
     require(maxSidecarAppends > 0,
       s"maxSidecarAppends must be positive, got $maxSidecarAppends")
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    def count(dir: String, pattern: String): Int =
-      try fs.listStatus(new Path(dir))
-        .count(_.getPath.getName.matches(pattern))
-      catch { case _: java.io.FileNotFoundException => 0 }
-    val bloomAppends = count(KeyBloom.bloomDir(root, table),
-      "batch-\\d+\\.bloom")
-    val indexAppends = indexColumns.map(c =>
-      count(SecondaryIndex.indexDir(root, table, c), "_cover-\\d+"))
-    val due = bloomAppends > maxSidecarAppends ||
-      indexAppends.exists(_ > maxSidecarAppends)
+    val due = KeyBloom.unfoldedBatches(spark, root, table) > maxSidecarAppends ||
+      indexColumns.exists(c =>
+        SecondaryIndex.unfoldedBatches(spark, root, table, c) > maxSidecarAppends)
     if (due) run(spark, store, root, table, indexColumns, lastCommitted,
       vacuumRetainBatches)
     due

@@ -1,12 +1,10 @@
 package graft.streaming
 
+import graft.sinks.CommitLog
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-
-import java.io.{BufferedReader, InputStreamReader}
-import java.nio.charset.StandardCharsets.UTF_8
 
 /** LIVE schema-drift monitor over in-band open-schema payloads — the
   * streaming twin of the q64 batch profile (the metadata query an
@@ -97,8 +95,6 @@ object DriftMonitor {
   // artifact state: fold pointer + unfolded batch directories
   // ---------------------------------------------------------------------
 
-  private val FoldName = "_fold-(\\d+)".r
-
   private final case class State(fold: Option[(Long, Long)], // (n, foldedThrough)
                                  batches: Seq[(Long, String)],
                                  foldDirs: Set[Long],
@@ -111,47 +107,23 @@ object DriftMonitor {
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def readPointer(fs: FileSystem, dir: String, n: Long): Option[Long] =
-    try {
-      val in = new BufferedReader(new InputStreamReader(
-        fs.open(new Path(dir, s"_fold-$n")), UTF_8))
-      try {
-        val header = in.readLine()
-        require(header != null && header.startsWith("graft-drift-fold"),
-          s"bad drift-fold header in $dir/_fold-$n")
-        Iterator.continually(in.readLine()).takeWhile(_ != null)
-          .collectFirst { case l if l.startsWith("folded_through ") =>
-            l.stripPrefix("folded_through ").trim.toLong }
-      } finally in.close()
-    } catch { case _: java.io.IOException => None }
-
   private def readState(fs: FileSystem, dir: String): State = {
-    val names =
-      try fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    val ptrs = names.collect { case FoldName(n) => n.toLong }
-    val folds = names.collect {
-      case n if n.startsWith("fold-") && n.stripPrefix("fold-").forall(_.isDigit) =>
-        n.stripPrefix("fold-").toLong
-    }.toSet
-    val fold = ptrs.sorted.reverseIterator
-      .flatMap(n => readPointer(fs, dir, n).map(n -> _)).nextOption()
-    val batches = names
-      .collect { case n if n.matches("batch-\\d+") =>
-        n.stripPrefix("batch-").toLong -> s"$dir/$n" }
-      .sortBy(_._1)
-    State(fold, batches, folds, ptrs.toSet)
+    val v = CommitLog.list(fs, dir)
+    val ptrs = v.ids("_fold-")
+    val fold = ptrs.reverseIterator.flatMap { n =>
+      CommitLog.read(v, s"_fold-$n", "graft-drift-fold").flatMap(_.collectFirst {
+        case l if l.startsWith("folded_through ") =>
+          n -> l.stripPrefix("folded_through ").trim.toLong })
+    }.nextOption()
+    State(fold, v.ids("batch-").map(id => id -> s"$dir/batch-$id"),
+      v.ids("fold-").toSet, ptrs.toSet)
   }
 
+  /** Commit `_fold-<n>` create-once (a lost rename is a replay). */
   private def commitPointer(fs: FileSystem, dir: String, n: Long,
-                            foldedThrough: Long): Unit = {
-    val tmp = new Path(dir, s"._fold-$n.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"graft-drift-fold 1\nfolded_through $foldedThrough\n"
-      .getBytes(UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, new Path(dir, s"_fold-$n"))) fs.delete(tmp, false)
-  }
+                            foldedThrough: Long): Unit =
+    CommitLog.publishText(fs, dir, s"_fold-$n",
+      s"graft-drift-fold 1\nfolded_through $foldedThrough\n")
 
   /** Batch directories are append-complete once written, so a plain
     * read suffices; an unreadable (empty) set is just "no rows". */

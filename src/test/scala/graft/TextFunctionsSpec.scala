@@ -100,6 +100,20 @@ class TextFunctionsSpec extends SparkSuite {
       assert(r.getSeq[Long](4) == r.getSeq[Long](5), s"winnow diverges: $r")
       assert(!r.isNullAt(0) && !r.isNullAt(4), s"native must never be null: $r")
     }
+    // null-bearing hash arrays (an ARRAY<BIGINT> that admits nulls):
+    // null elements are skipped as array_min skips them, and a window
+    // of nulls only selects NULL in both forms
+    val withNulls = Seq(Seq(Some(3L), None, Some(1L), Some(5L)),
+      Seq(None, None, Some(7L)), Seq(None),
+      Seq(Some(4L), None, None, None, Some(2L), Some(2L))).toDF("hs")
+    val winnowed = withNulls.select(
+      TextFunctions.winnowSelect($"hs", 2).as("nw"),
+      TextFunctions.winnowSelectHof($"hs", 2).as("hw")).collect()
+    winnowed.foreach { r =>
+      assert(r.getSeq[Any](0) == r.getSeq[Any](1), s"winnow diverges on nulls: $r")
+    }
+    assert(winnowed.map(_.getSeq[Any](0)).toSeq == Seq(Seq(3L, 1L),
+      Seq(null, 7L), Seq(null), Seq(4L, null, 2L)))
   }
 
   test("native minhash signature == HOF signature on fixture shingle sets") {
